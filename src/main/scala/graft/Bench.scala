@@ -36,6 +36,9 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       } + "\""
+    // JSON numbers need '.' decimals whatever the JVM default locale is
+    def fmt(v: Double, digits: Int): String =
+      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
     // Uncounted warm-up: JVM/codegen/parquet-reader init otherwise
     // lands entirely on whichever query sorts first.
@@ -386,16 +389,16 @@ object Bench {
         else a.zip(b).map { case ((k, x), (_, y)) => k -> math.min(x, y) }
       }
 
-    val qs = (results ++ storeResults).map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }
+    val qs = (results ++ storeResults).map { case (k, v) => jstr(k) + ":" + fmt(v, 3) }
       .mkString("{", ",", "}")
     // one entry per query even when reps > 1 fail repeatedly —
     // duplicate keys make the JSON object ill-formed for strict parsers
     val errJson = errors.distinctBy(_._1).map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
-    val shJson = shuffleMb.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + f"$v%.2f" }
+    val shJson = shuffleMb.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + fmt(v, 2) }
       .mkString("{", ",", "}")
     val shJobsJson = shuffleJobsMb.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + f"$v%.2f" }
+      .map { case (k, v) => jstr(k) + ":" + fmt(v, 2) }
       .mkString("{", ",", "}")
     val total = (results ++ storeResults).collect { case (_, v) if v >= 0 => v }.sum
     // The driver captures a bounded TAIL of stdout — round 5's committed
@@ -421,12 +424,12 @@ object Bench {
       catch { case _: Throwable => () } // read-only cwd must not fail the bench
     println(s"""{"metric":"shuffle_mb_detail","shuffle_mb":$shJson,"shuffle_mb_jobs":$shJobsJson,"sf":${jstr(sfDir)}}""")
     val sampJson = repSamples.reverse.map { case (n, ss) =>
-      s"${jstr(n)}:[${ss.map(s => f"$s%.3f").mkString(",")}]"
+      s"${jstr(n)}:[${ss.map(s => fmt(s, 3)).mkString(",")}]"
     }.mkString("{", ",", "}")
     println(s"""{"metric":"rep_samples","samples":$sampJson,"sf":${jstr(sfDir)}}""")
     if (sliceResults.nonEmpty) {
       val sliceJson = sliceResults
-        .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }.mkString("{", ",", "}")
+        .map { case (k, v) => jstr(k) + ":" + fmt(v, 3) }.mkString("{", ",", "}")
       println(s"""{"metric":"x100_slice","queries":$sliceJson,"cpus":${jstr(cpus)},"dir":${jstr(sys.env("SPARK_GRAFT_BENCH_SLICE_DIR"))}}""")
     }
     // The historical one-line contract (metric/value/unit/queries/
@@ -448,7 +451,7 @@ object Bench {
     // No timing methodology changed; the numbers are the same dict.
     println(contractLine)
     val entryStrs = (results ++ storeResults)
-      .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }
+      .map { case (k, v) => jstr(k) + ":" + fmt(v, 3) }
     val chunks = {
       val buf = scala.collection.mutable.ListBuffer.empty[List[String]]
       var cur = List.empty[String]

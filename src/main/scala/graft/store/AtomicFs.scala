@@ -3,26 +3,40 @@ package graft.store
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Filesystem atomicity primitives shared by the control-plane journals
-  * ([[ControlJournal]], [[SharedJournal]]). Two operations cover every
-  * need: publish-with-replace (pointer flips, lease refresh) and
+/** Filesystem atomicity primitives shared by the journals
+  * ([[ControlJournal]], [[SharedJournal]]), [[EpochClaim]] and
+  * [[VersionPointer]]. Two operations cover every need:
+  * publish-with-replace (pointer flips, claim renewal) and
   * create-exclusive (claim races — the reference's row-lock analogue).
   */
 private[store] object AtomicFs {
 
-  /** Write-to-temp + ONE atomic rename-with-overwrite (FileContext) —
-    * no delete-then-rename window where a concurrent reader could
-    * observe the path absent.
+  /** Write-to-temp + ONE atomic rename-with-overwrite — no window where
+    * a concurrent reader could observe the path absent. On local paths
+    * that is rename(2): FileContext's local rename-with-OVERWRITE
+    * deletes the target first, and in that window a pointer reader
+    * falls back to a stale version and a claimant sees no claim at all.
+    * The checksum sidecar follows the data file (a reader pairing old
+    * data with the new sidecar gets a transient ChecksumException).
     */
   def atomicWrite(fs: FileSystem, conf: Configuration,
                   path: Path, bytes: Array[Byte]): Unit = {
     val tmp = new Path(path.getParent, s".tmp-${path.getName}")
     val out = fs.create(tmp, true)
     try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(path).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(path),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val dst = fs.makeQualified(path)
+    if (dst.toUri.getScheme == "file") {
+      def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+      def sidecar(p: Path) = local(new Path(p.getParent, s".${p.getName}.crc"))
+      import java.nio.file.{Files, StandardCopyOption => Opt}
+      Files.deleteIfExists(sidecar(path))
+      Files.move(local(tmp), local(path), Opt.ATOMIC_MOVE, Opt.REPLACE_EXISTING)
+      if (Files.exists(sidecar(tmp)))
+        Files.move(sidecar(tmp), sidecar(path), Opt.ATOMIC_MOVE, Opt.REPLACE_EXISTING)
+    } else {
+      val fc = org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, conf)
+      fc.rename(fs.makeQualified(tmp), dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
   }
 
   /** Create `path` with the given content atomically, failing (false)

@@ -64,14 +64,14 @@ final class ControlJournal(dirStr: String,
   private var seq: Long = 0L
 
   // ------------------------------------------------------------------
-  // Ownership lease — the shared epoch-file scheme ([[WriterLease]]);
+  // Ownership lease — the shared epoch-file scheme ([[EpochClaim]]);
   // a pre-epoch journal's legacy `_owner` file reads as epoch 0.
 
-  private val lease = new WriterLease(dir, fs, conf, ownerId, clock, leaseMs,
-    prefix = OwnerPrefix, legacyName = Some(LegacyOwnerFile), what = "control journal")
+  private val lease = new EpochClaim(dir, fs, ownerId, clock, leaseMs,
+    prefix = OwnerPrefix, legacyName = Some(LegacyOwnerFile))
 
   /** Acquire the writer lease, or throw [[OwnershipHeldException]] if a
-    * different live owner holds it (see [[WriterLease.acquire]] — an
+    * different live owner holds it (see [[EpochClaim.acquire]] — an
     * expired lease is taken over atomically). Also positions `seq`
     * after the last existing entry so appends continue the sequence.
     */
@@ -83,8 +83,6 @@ final class ControlJournal(dirStr: String,
   /** Release the lease (clean shutdown). Safe to call when not held. */
   def release(): Unit = lease.release()
 
-  private def refreshLease(): Unit = lease.refresh()
-
   // ------------------------------------------------------------------
   // Append / replay / checkpoint
 
@@ -92,7 +90,7 @@ final class ControlJournal(dirStr: String,
     * control-plane critical section, so `seq` needs no extra lock.
     */
   def append(rec: Record): Unit = {
-    refreshLease()
+    lease.refresh()
     seq += 1
     atomicWrite(entryPath(seq), mapper.writeValueAsBytes(
       if (rec.at == 0L) rec.copy(at = clock().getTime) else rec))
@@ -118,7 +116,7 @@ final class ControlJournal(dirStr: String,
     * entries (and older snapshots) it supersedes.
     */
   def checkpoint(views: Seq[ViewRegistration], locks: Seq[LockRow]): Unit = {
-    refreshLease()
+    lease.refresh()
     val snap = Snapshot(views.map(JView.of).toArray, locks.map(JLock.of).toArray)
     atomicWrite(new Path(dir, f"$SnapshotPrefix$seq%020d.json"),
       mapper.writeValueAsBytes(snap))

@@ -579,16 +579,16 @@ final class EventStore(val spark: SparkSession) {
     */
   @volatile private var diskLayout: Option[(String, Int)] = None
 
-  /** Optional at-rest-log writer lease (reuses the ControlJournal
-    * epoch-lease scheme): without it, two PROCESSES calling save() or
-    * compact() on the same dir race the `_current` pointer flip — the
-    * manifest serializes readers against ONE writer, not writers
-    * against each other. With it, the second live writer is rejected
-    * at [[acquireLogWriter]], and every publish re-verifies the lease
-    * ([[WriterLease.refresh]] throws if a higher epoch fenced us after
-    * a crash-length pause).
+  /** Optional at-rest-log writer lease (an [[EpochClaim]] on
+    * `_writer-` files, the ControlJournal ownership scheme): without
+    * it, two PROCESSES calling save() or compact() on the same dir race
+    * the `_current` pointer flip — the manifest serializes readers
+    * against ONE writer, not writers against each other. With it, the
+    * second live writer is rejected at [[acquireLogWriter]], and every
+    * publish re-verifies the lease ([[EpochClaim.refresh]] throws if a
+    * higher epoch fenced us after a crash-length pause).
     */
-  @volatile private var logLease: Option[WriterLease] = None
+  @volatile private var logLease: Option[EpochClaim] = None
 
   /** Claim exclusive write ownership of the log at `dir`, or throw
     * [[ControlJournal.OwnershipHeldException]] while another live
@@ -601,8 +601,8 @@ final class EventStore(val spark: SparkSession) {
     require(logLease.isEmpty, "log writer lease already held; release it first")
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new HPath(dir)
-    val lease = new WriterLease(p, FileSystem.get(p.toUri, conf), conf,
-      ownerId, () => now(), leaseMs, prefix = "_writer-", what = "event log")
+    val lease = new EpochClaim(p, FileSystem.get(p.toUri, conf),
+      ownerId, () => now(), leaseMs, prefix = "_writer-")
     lease.acquire()
     logLease = Some(lease)
   }
@@ -672,13 +672,13 @@ final class EventStore(val spark: SparkSession) {
     */
   def save(dir: String, buckets: Int = 32, retainDepth: Int = 1): Unit = commitLock.synchronized {
     verifyLogWriter()
-    val newVer = EventStore.nextVersionName(dir, spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val newVer = EventStore.Pointer.nextVersion(dir, conf)
     withLayoutCols(events.toDF(), buckets)
       .write.partitionBy("bucket", "day").mode("overwrite").parquet(s"$dir/$newVer")
     deciderRegistry.write.mode("overwrite").parquet(s"$dir/deciders")
     decidersSavedAt = Some((dir, decidersVersion))
-    fenceLogWriter()
-    EventStore.publishVersion(dir, newVer, spark.sparkContext.hadoopConfiguration, retainDepth)
+    EventStore.Pointer.publish(dir, newVer, conf, retainDepth)(fenceLogWriter())
     // rebase the in-memory plan onto the just-published version: the
     // plan may still lazily reference files of an OLDER version that
     // the next rewrite retires — exactly the compact() hazard, so the
@@ -757,7 +757,7 @@ final class EventStore(val spark: SparkSession) {
     require(diskLayout.exists(_._1 == dir), s"no saved log at $dir")
     val conf = spark.sparkContext.hadoopConfiguration
     val curPath = eventsPath(dir)
-    val newVer = EventStore.nextVersionName(dir, conf)
+    val newVer = EventStore.Pointer.nextVersion(dir, conf)
     readEventsDir(curPath)
       .repartition(col("bucket"), col("day"))
       .sortWithinPartitions($"bucket", $"day", $"decider_id", $"offset")
@@ -767,8 +767,7 @@ final class EventStore(val spark: SparkSession) {
     // unflushed tail now, then rebase `events` onto the compacted copy,
     // so post-compact reads never depend on retired files
     val tail = events.filter($"offset" > flushedOffset).localCheckpoint(true)
-    fenceLogWriter()
-    EventStore.publishVersion(dir, newVer, conf, retainDepth)
+    EventStore.Pointer.publish(dir, newVer, conf, retainDepth)(fenceLogWriter())
     events = readEventsDir(s"$dir/$newVer").drop("bucket", "day").as[EventRow]
       .union(tail)
   }
@@ -794,14 +793,13 @@ final class EventStore(val spark: SparkSession) {
 
 object EventStore {
   // ------------------------------------------------------------------
-  // Manifest-pointer publication for the at-rest log. `_current` names
-  // the live `events_v<N>` directory; rewrites publish a new version
-  // and flip the pointer atomically (temp-file + rename). External
-  // readers resolve through [[resolveEventsPath]] too, so the same
-  // no-vacuum guarantee holds outside this class.
+  // Manifest-pointer publication for the at-rest log ([[VersionPointer]]):
+  // `_current` names the live `events_v<N>` directory; the legacy
+  // unversioned `events` directory is the pre-versioning layout.
+  // External readers resolve through [[resolveEventsPath]] too, so the
+  // same no-vacuum guarantee holds outside this class.
 
-  private val PointerFile = "_current"
-  private val VersionName = """events_v(\d+)""".r
+  private[store] val Pointer = new VersionPointer("_current", "events", "")
 
   /** The live events directory under `dir`: the version the `_current`
     * pointer names; with no pointer, the highest on-disk `events_v<N>`
@@ -809,115 +807,8 @@ object EventStore {
     * unversioned `$dir/events` (pre-versioning logs read unchanged).
     */
   def resolveEventsPath(dir: String, conf: Configuration): String =
-    readPointer(dir, conf).map(v => s"$dir/$v")
-      .orElse(latestVersionOnDisk(dir, conf).map(v => s"$dir/$v"))
-      .getOrElse(s"$dir/events")
-
-  private def latestVersionOnDisk(dir: String, conf: Configuration): Option[String] = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
-    val d = new HPath(dir)
-    if (!fs.exists(d)) None
-    else fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .collect { case v @ VersionName(n) => (n.toLong, v) }
-      .sortBy(_._1).lastOption.map(_._2)
-  }
-
-  private def readPointer(dir: String, conf: Configuration): Option[String] = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
-    val p = new HPath(s"$dir/$PointerFile")
-    var attempt = 0
-    while (true) {
-      try {
-        if (!fs.exists(p)) return None
-        val in = fs.open(p)
-        try return Some(
-          new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-        finally in.close()
-      } catch {
-        // Transient by construction: the pointer flip renames the data
-        // file and (on ChecksumFileSystem, i.e. local FS) its .crc
-        // sidecar in two non-atomic steps, so a concurrent reader can
-        // catch the window where they mismatch (ChecksumException) or
-        // the file is mid-replace (FileNotFoundException after the
-        // exists check). The flip completes in microseconds — retry
-        // briefly; a PERSISTENT error is real and rethrows.
-        case e @ (_: org.apache.hadoop.fs.ChecksumException
-                  | _: java.io.FileNotFoundException) =>
-          attempt += 1
-          if (attempt > 50) throw e
-          Thread.sleep(2)
-      }
-    }
-    None // unreachable
-  }
-
-  /** Next version to write: one past the max of the pointer's version
-    * and the highest on-disk `events_v<N>`. The disk fallback matters
-    * when the pointer was lost (the crash case [[resolveEventsPath]]'s
-    * own fallback exists for): numbering must continue PAST the
-    * version concurrent readers are actively resolving to, or the next
-    * rewrite would restart at v1 and immediately delete the live
-    * fallback version out from under them.
-    */
-  private[store] def nextVersionName(dir: String, conf: Configuration): String = {
-    val fromPtr = readPointer(dir, conf).collect { case VersionName(d) => d.toLong }
-    val fromDisk = latestVersionOnDisk(dir, conf).collect { case VersionName(d) => d.toLong }
-    s"events_v${(fromPtr ++ fromDisk).maxOption.getOrElse(0L) + 1}"
-  }
-
-  /** Atomically flip `_current` to `newVer`, then delete every version
-    * directory except the new one and its `retainDepth` youngest
-    * predecessors (kept for scans that listed files before the flip —
-    * the reader-lifetime contract: a scan must finish within
-    * `retainDepth` subsequent rewrites of the version it resolved, or
-    * its files may be deleted mid-scan). The legacy unversioned
-    * `$dir/events` directory counts as the OLDEST predecessor: it is
-    * retained through the rewrite that republishes its data and
-    * retired by a later one, like any superseded version — never kept
-    * forever, never silently resurrectable. The flip uses FileContext's
-    * rename-with-OVERWRITE — one atomic replace, no deleted-pointer
-    * window (a plain FileSystem.rename cannot replace, which would
-    * force delete-then-rename and a vacuum a concurrent
-    * [[resolveEventsPath]] could fall into; the max-version fallback
-    * there additionally covers a crash that loses the pointer — and
-    * predecessors are computed from DISK, not the pointer, so that
-    * fallback-live version stays retained too).
-    */
-  private[store] def publishVersion(dir: String, newVer: String,
-                                    conf: Configuration,
-                                    retainDepth: Int = 1): Unit = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
-    // Read the pointer BEFORE the flip: the version readers are
-    // actively resolving to MUST survive this rewrite regardless of
-    // how the on-disk dirs sort. A crash-orphaned higher-numbered dir
-    // (a save that wrote events_vN but died before flipping) would
-    // otherwise rank as the youngest predecessor and, at retainDepth=1,
-    // push the pointer-live previous version out of the keep set —
-    // deleting it out from under in-flight scans.
-    val pointerPrev = readPointer(dir, conf)
-    val tmp = new HPath(s"$dir/.tmp-$PointerFile")
-    val out = fs.create(tmp, true)
-    try out.write(newVer.getBytes("UTF-8")) finally out.close()
-    val ptr = new HPath(s"$dir/$PointerFile")
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(ptr).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(ptr),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    val legacy = new HPath(s"$dir/events")
-    val predecessors = // youngest-first, legacy oldest
-      (fs.listStatus(new HPath(dir)).toSeq.map(_.getPath.getName)
-        .collect { case v @ VersionName(n) if v != newVer => (n.toLong, v) }
-        ++ (if (fs.exists(legacy)) Seq((0L, "events")) else Nil))
-        .sortBy(-_._1).map(_._2)
-    val keep = Set(newVer) ++ pointerPrev ++ predecessors.take(math.max(retainDepth, 0))
-    fs.listStatus(new HPath(dir)).foreach { st =>
-      st.getPath.getName match {
-        case v @ VersionName(_) if !keep(v) => fs.delete(st.getPath, true)
-        case "events" if !keep("events") => fs.delete(st.getPath, true)
-        case _ => ()
-      }
-    }
-  }
+    s"$dir/" + Pointer.read(dir, conf).orElse(Pointer.latestOnDisk(dir, conf))
+      .getOrElse(Pointer.legacyName)
 
   /** Row shape after the join-based validation stages, consumed by the
     * per-stream sequential replay. Top-level so Spark can derive an

@@ -27,7 +27,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *     directory (one sorted file per band/bucket — row-group min/max
   *     stats then prune within the partition too) and publishes it
   *     MVCC-style through a `_current.<component>` pointer — the
-  *     EventStore.compact discipline (EventStore.scala `publishVersion`):
+  *     EventStore.compact discipline, one [[VersionPointer]] for both:
   *     one atomic rename flips readers to the compacted copy, there is
   *     no window where a listing can fail, in-flight scans on the
   *     previous version finish against its retained files (deleted
@@ -43,7 +43,8 @@ object IndexMaintenance {
   /** Test-only fail-point seam (the etcd/TiKV failpoint pattern):
     * every maintenance operation calls [[failPoint]] at each file-op
     * boundary — after a metadata delete, between component data
-    * writes, before/after a pointer flip. Production default is a
+    * writes, before/after a pointer flip (every [[VersionPointer]]
+    * publish, the event log's included). Production default is a
     * no-op; IndexCrashPropertySpec installs a throwing hook to
     * simulate a process crash at EVERY boundary mechanically (round
     * 12 found two real lifecycle bugs only by manual review — this is
@@ -148,9 +149,8 @@ object IndexMaintenance {
   // Versioned component publication (the EventStore `_current` pattern,
   // generalized to named components within one index directory)
 
-  private def pointerFile(component: String) = s"_current.$component"
-  private def versionRe(component: String) =
-    (java.util.regex.Pattern.quote(component) + """_v(\d+)\.parquet""").r
+  private def pointer(component: String) =
+    new VersionPointer(s"_current.$component", component, ".parquet")
 
   /** The live directory for `component` under `dir`: the version the
     * `_current.<component>` pointer names, else the legacy unversioned
@@ -163,20 +163,8 @@ object IndexMaintenance {
     * publish's retention pass, and nextVersionName still numbers
     * above it so a retry never collides). */
   def resolve(dir: String, component: String, conf: Configuration): String = {
-    val fs = fsOf(dir, conf)
-    val ptr = new HPath(s"$dir/${pointerFile(component)}")
-    val fromPtr =
-      if (!fs.exists(ptr)) None
-      else {
-        val in = fs.open(ptr)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.commons.io.IOUtils.copy(in, buf)
-          Some(buf.toString("UTF-8").trim)
-        } finally in.close()
-      }
-    fromPtr.map(v => s"$dir/$v")
-      .getOrElse(s"$dir/$component.parquet")
+    val p = pointer(component)
+    s"$dir/" + p.read(dir, conf).getOrElse(p.legacyName)
   }
 
   /** Retire a component's versioned state so a REBUILD into the
@@ -201,21 +189,19 @@ object IndexMaintenance {
     if (fs.exists(marker)) fs.delete(marker, false)
     failPoint("reset:marker-removed")
     for (component <- components) {
-      val ptr = new HPath(s"$dir/${pointerFile(component)}")
+      val p = pointer(component)
+      val ptr = new HPath(s"$dir/${p.pointerFile}")
       if (fs.exists(ptr)) fs.delete(ptr, false)
       failPoint(s"reset:pointer-removed:$component")
-      val re = versionRe(component)
-      fs.listStatus(d).toSeq.map(_.getPath.getName).foreach {
-        case v @ re(_) =>
-          fs.delete(new HPath(s"$dir/$v"), true)
-          failPoint(s"reset:version-removed:$component")
-        case _ => ()
+      fs.listStatus(d).toSeq.map(_.getPath.getName).filter(p.isVersion).foreach { v =>
+        fs.delete(new HPath(s"$dir/$v"), true)
+        failPoint(s"reset:version-removed:$component")
       }
     }
   }
 
   /** Run `f` holding the index's cross-process MAINTENANCE MUTEX
-    * ([[FsMutex]] — the SharedJournal/SharedLog claim primitive,
+    * ([[EpochClaim]] — the SharedJournal/SharedLog claim primitive,
     * `_maint-` epoch files in the index root, invisible to the
     * version regex and the component readers). Serializes
     * build/append/compact/vacuum across processes, CLOSING the
@@ -230,7 +216,7 @@ object IndexMaintenance {
     * (crashed, or wholly stalled past the TTL). For the one hole a
     * TTL mutex leaves (a holder stalled PAST the TTL whose lock was
     * taken over mid-write), [[publish]] re-checks
-    * [[FsMutex.stillHeld]] before every pointer flip — a superseded
+    * [[EpochClaim.stillHeld]] before every pointer flip — a superseded
     * holder fails BEFORE publishing over the takeover's work, the
     * same defense-in-depth [[guardedAppend]]'s pointer check gives
     * appends. Waiters give up after `acquireDeadlineMs` with a clear
@@ -242,16 +228,25 @@ object IndexMaintenance {
   def withMaintenanceLock[T](dir: String, conf: Configuration,
                              ttlMs: Long = 30L * 60 * 1000,
                              acquireDeadlineMs: Long = 120L * 1000)
-                            (f: => T): T = {
+                            (f: => T): T =
+    maintenanceLocked(dir, conf, ttlMs, acquireDeadlineMs,
+      () => new java.sql.Timestamp(System.currentTimeMillis()))(f)
+
+  /** [[withMaintenanceLock]] on an injected claim clock (the heartbeat
+    * keeps its wall-clock period) — the seam frozen-clock specs use. */
+  private[store] def maintenanceLocked[T](dir: String, conf: Configuration,
+                                          ttlMs: Long, acquireDeadlineMs: Long,
+                                          clock: () => java.sql.Timestamp)
+                                         (f: => T): T = {
     val fs = fsOf(dir, conf)
     fs.mkdirs(new HPath(dir))
-    val m = new FsMutex(new HPath(dir), fs,
+    val m = new EpochClaim(new HPath(dir), fs,
       ownerId = java.util.UUID.randomUUID().toString,
-      clock = () => new java.sql.Timestamp(System.currentTimeMillis()),
+      clock = clock,
       ttlMs = ttlMs,
       prefix = "_maint-",
       acquireDeadlineMs = acquireDeadlineMs)
-    m.acquire()
+    m.lock()
     val stop = new java.util.concurrent.CountDownLatch(1)
     val hb = new Thread(() => {
       val period = math.max(ttlMs / 3, 250L)
@@ -282,7 +277,7 @@ object IndexMaintenance {
     * call in the index family runs on the caller thread of its
     * `withMaintenanceLock` section (Spark job threads never publish).
     */
-  private val currentMaintMutex = new ThreadLocal[FsMutex]
+  private val currentMaintMutex = new ThreadLocal[EpochClaim]
 
   /** Reclaim every superseded version of `components` at `dir`,
     * keeping ONLY the live version each `_current` pointer names (or
@@ -305,11 +300,9 @@ object IndexMaintenance {
     withMaintenanceLock(dir, conf) {
     components.flatMap { component =>
       val liveName = resolve(dir, component, conf).stripPrefix(s"$dir/")
-      val re = versionRe(component)
-      val legacy = s"$component.parquet"
+      val p = pointer(component)
       fs.listStatus(d).toSeq.map(_.getPath.getName).filter { name =>
-        val versioned = name match { case re(_) => true; case _ => false }
-        (versioned || name == legacy) && name != liveName
+        (p.isVersion(name) || name == p.legacyName) && name != liveName
       }.map { name =>
         fs.delete(new HPath(s"$dir/$name"), true)
         failPoint(s"vacuum:deleted:$component")
@@ -355,83 +348,35 @@ object IndexMaintenance {
     }
   }
 
-  private def latestOnDisk(dir: String, component: String,
-                           conf: Configuration): Option[String] = {
-    val fs = fsOf(dir, conf)
-    val d = new HPath(dir)
-    val re = versionRe(component)
-    if (!fs.exists(d)) None
-    else fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .collect { case v @ re(n) => (n.toLong, v) }
-      .sortBy(_._1).lastOption.map(_._2)
-  }
-
   /** Fresh directory name for the next compacted version of
-    * `component` (strictly above every version on disk). */
+    * `component` (strictly above every version on disk and the live one). */
   def nextVersionName(dir: String, component: String,
-                      conf: Configuration): String = {
-    val n = latestOnDisk(dir, component, conf)
-      .map { v => val re = versionRe(component)
-        v match { case re(k) => k.toLong; case _ => 0L } }
-      .getOrElse(0L)
-    s"${component}_v${n + 1}.parquet"
-  }
+                      conf: Configuration): String =
+    pointer(component).nextVersion(dir, conf)
 
-  /** Atomically flip `_current.<component>` to `newVer` and delete
-    * superseded versions beyond the `retainDepth` youngest (the
-    * pointer-previous version always survives this rewrite — the
-    * EventStore reader-lifetime contract: a scan must finish within
-    * `retainDepth` subsequent rewrites of the version it resolved).
-    * The legacy unversioned directory counts as the oldest
-    * predecessor.
+  /** Atomically flip `_current.<component>` to `newVer` and retire
+    * superseded versions ([[VersionPointer.publish]]: the
+    * pointer-previous version and the `retainDepth` youngest survive,
+    * the legacy unversioned directory counting as the oldest).
     */
   def publish(dir: String, component: String, newVer: String,
-              conf: Configuration, retainDepth: Int = 1): Unit = {
-    val fs = fsOf(dir, conf)
-    val prevLive = { // pointer target BEFORE the flip — must survive
-      val ptr = new HPath(s"$dir/${pointerFile(component)}")
-      if (!fs.exists(ptr)) None
-      else {
-        val in = fs.open(ptr)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.commons.io.IOUtils.copy(in, buf)
-          Some(buf.toString("UTF-8").trim)
-        } finally in.close()
+              conf: Configuration, retainDepth: Int = 1): Unit =
+    pointer(component).publish(dir, newVer, conf, retainDepth) {
+      // Defense in depth for the one hole a TTL mutex leaves: a holder
+      // stalled past the TTL whose claim was taken over mid-rewrite
+      // must NOT flip the pointer over the takeover's work. The
+      // heartbeat makes this unreachable for a live holder; it fires
+      // only after a stall longer than the full TTL.
+      Option(currentMaintMutex.get()).foreach { m =>
+        if (!m.stillHeld())
+          throw new IllegalStateException(
+            s"maintenance lock for $dir was lost (TTL takeover after a " +
+              s"stall) before publishing $component -> $newVer; aborting " +
+              "the pointer flip. The superseded rewrite directory is " +
+              "garbage-collected by the takeover's next publish; re-run " +
+              "the operation.")
       }
     }
-    failPoint(s"publish:before-flip:$component")
-    // Defense in depth for the one hole a TTL mutex leaves: a holder
-    // stalled past the TTL whose claim was taken over mid-rewrite
-    // must NOT flip the pointer over the takeover's work. The
-    // heartbeat makes this unreachable for a live holder; it fires
-    // only after a stall longer than the full TTL.
-    Option(currentMaintMutex.get()).foreach { m =>
-      if (!m.stillHeld())
-        throw new IllegalStateException(
-          s"maintenance lock for $dir was lost (TTL takeover after a " +
-            s"stall) before publishing $component -> $newVer; aborting " +
-            "the pointer flip. The superseded rewrite directory is " +
-            "garbage-collected by the takeover's next publish; re-run " +
-            "the operation.")
-    }
-    AtomicFs.atomicWrite(fs, conf, new HPath(s"$dir/${pointerFile(component)}"),
-      newVer.getBytes("UTF-8"))
-    failPoint(s"publish:after-flip:$component")
-    val legacy = s"$component.parquet"
-    val re = versionRe(component)
-    val predecessors = // youngest-first, legacy oldest
-      (fs.listStatus(new HPath(dir)).toSeq.map(_.getPath.getName)
-        .collect { case v @ re(n) if v != newVer => (n.toLong, v) }
-        ++ (if (fs.exists(new HPath(s"$dir/$legacy"))) Seq((0L, legacy)) else Nil))
-        .sortBy(-_._1).map(_._2)
-    val keep = Set(newVer) ++ prevLive ++
-      predecessors.take(math.max(retainDepth, 0))
-    (predecessors.filterNot(keep)).foreach { v =>
-      fs.delete(new HPath(s"$dir/$v"), true)
-      failPoint(s"publish:retention-deleted:$component")
-    }
-  }
 
   /** True when any listed component's live version has accumulated
     * more parquet files than `threshold` — the ingest-loop

@@ -63,7 +63,7 @@ final class SharedJournal(dirStr: String,
   private val lanesDir = new Path(dir, "lanes")
   private val laneDir = new Path(lanesDir, writerId)
   private var laneSeq: Long = 0L
-  private val mutex = new FsMutex(dir, fs, writerId, clock, mutexTtlMs, MutexPrefix)
+  private val mutex = new EpochClaim(dir, fs, writerId, clock, mutexTtlMs, MutexPrefix)
 
   /** Lamport stamp for cross-lane ordering. Wall clocks CANNOT order
     * the merge: with ties (frozen test clocks) or skew, writer B's old
@@ -92,7 +92,7 @@ final class SharedJournal(dirStr: String,
   // ------------------------------------------------------------------
   // Candidate-selection mutex
 
-  /** Run `f` holding the cross-process mutex ([[FsMutex]]: epoch-file
+  /** Run `f` holding the cross-process mutex ([[EpochClaim]]: epoch-file
     * create-exclusive claims, crashed-holder TTL expiry).
     */
   def withMutex[T](f: => T): T = mutex.withLock(f)

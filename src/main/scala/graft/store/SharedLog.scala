@@ -12,9 +12,9 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * (reference schema.sql:23-26,44; proven concurrent by
   * tests/integration/concurrent-access/test_concurrent_producers.sql).
   * [[EventStore]] gives those semantics to N threads of ONE process
-  * (commitLock); [[WriterLease]] deliberately admits a single at-rest
-  * log writer. This class completes the producer half the way
-  * [[SharedJournal]] completed the consumer half:
+  * (commitLock); its [[EpochClaim]] writer lease deliberately admits
+  * a single at-rest log writer. This class completes the producer half
+  * the way [[SharedJournal]] completed the consumer half:
   *
   *  - **Commit sequence as the log's shared truth**: the log at `dir`
   *    IS an ordered sequence of manifests `commits/<seq>.json`, each
@@ -22,7 +22,7 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   *    batch), a schema registration, or a compacted base. Writers
   *    never rewrite anything — publish is one atomic create-exclusive.
   *  - **Serialized validate-and-commit**: append runs under a
-  *    cross-process TTL mutex ([[FsMutex]]): resync (fold rivals'
+  *    cross-process TTL mutex ([[EpochClaim]]): resync (fold rivals'
   *    commits into the local [[EventStore]]), validate through the
   *    store's untouched reference pipeline, write the data file, and
   *    publish the manifest. Two producers racing the same stream head
@@ -70,7 +70,7 @@ final class SharedLog(val spark: SparkSession,
   /** Injectable clock (deterministic created_at + mutex TTL in tests). */
   @volatile var now: () => Timestamp = () => new Timestamp(System.currentTimeMillis())
 
-  private val mutex = new FsMutex(dir, fs, writerId, () => now(), mutexTtlMs, "_logmutex-")
+  private val mutex = new EpochClaim(dir, fs, writerId, () => now(), mutexTtlMs, "_logmutex-")
   private var store: EventStore = null
   private var lastSeen: Long = 0L
 
@@ -191,9 +191,9 @@ final class SharedLog(val spark: SparkSession,
   })
 
   /** Delete manifests and data files superseded by the LATEST compact
-    * entry. Reader-lifetime contract (the publishVersion retainDepth
-    * analogue): every live reader must resync at least once between
-    * [[compact]] and vacuum; one that missed the window hits a missing
+    * entry. Reader-lifetime contract (the [[VersionPointer.publish]]
+    * retainDepth analogue): every live reader must resync at least once
+    * between [[compact]] and vacuum; one that missed the window hits a missing
     * file on its next resync and recovers by a full [[rebuild]] from
     * the base — correct, just costlier.
     */

@@ -129,15 +129,15 @@ class SharedProducersSpec extends SparkSpec with graft.testkit.TestKitReported {
     assert(a.appendEvent(in("e0", None)).isRight)
 
     // a third producer claims the commit mutex and dies holding it
-    val fsm = new FsMutex(new org.apache.hadoop.fs.Path(dir),
+    val fsm = new EpochClaim(new org.apache.hadoop.fs.Path(dir),
       org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
         spark.sparkContext.hadoopConfiguration),
       "crasher", clock, 5000L, "_logmutex-")
-    fsm.acquire() // never released
+    fsm.lock() // never released
 
     // past the TTL the survivor's claim loop takes the dead holder's
     // mutex over and the log advances (the blocked-before-expiry phase
-    // is FsMutex's claim loop — not awaited here, it would just spin)
+    // is EpochClaim.lock — not awaited here, it would just spin)
     nowMs = t0 + 5001L
     val b = openLog(spark.newSession(), dir, "B", ttlMs = 5000L)
     b.now = clock
